@@ -195,34 +195,78 @@ object KbLoader {
 
   /** Write a bundle back out as the four data files (the round-trip face:
     * `merge(builtin, load(render(builtin, dir)), replace = true) ==
-    * builtin`).
+    * builtin`). A value that [[load]] could not read back unchanged — it
+    * holds a tab, CR or newline, has surrounding whitespace, is empty where
+    * load would fill a default, or starts a row with `#` — is rejected with
+    * a [[KbFileError]] naming the file and row it would have been written
+    * to; nothing is written then.
     */
   def render(data: KbData, dir: String): Unit = {
     // fail fast on a cyclic taxonomy: with a cycle the roots computation
     // below (values minus keys) would silently drop the whole component
     Taxonomy(data.taxonomyParents).validated
-    val d = Paths.get(dir)
-    Files.createDirectories(d)
-    def write(name: String, text: String): Unit =
-      Files.write(d.resolve(name), text.getBytes(StandardCharsets.UTF_8))
-    write("lexicon.tsv", data.lexicon
-      .map { case (s, l) => s"$s\t$l" }.mkString("", "\n", "\n"))
-    write("kb.tsv", data.kb.map(e =>
-      s"${e.text}\t${e.id}\t${e.species}\t${e.namespace}\t${e.kb_rank}\t" +
-        s"${e.label}\t${e.is_protein_kb}\t${e.is_family_kb}")
-      .mkString("", "\n", "\n"))
-    write("stoplist.txt",
-      data.stopList.toSeq.sorted.mkString("", "\n", "\n"))
+    def rows(file: String, vs: Seq[Seq[(String, String)]]): String =
+      vs.zipWithIndex.map { case (fields, i) =>
+        fields.zipWithIndex.foreach { case ((what, v), j) =>
+          checkField(file, i + 1, what, v, leading = j == 0) }
+        fields.map(_._2).mkString("\t")
+      }.mkString("", "\n", "\n")
+    val lexicon = rows("lexicon.tsv", data.lexicon.map { case (s, l) =>
+      Seq("surface" -> s, "label" -> l) })
+    val kb = rows("kb.tsv", data.kb.map(e => Seq("text" -> e.text,
+      "id" -> e.id, "species" -> e.species, "namespace" -> e.namespace,
+      "kb_rank" -> e.kb_rank.toString, "label" -> e.label,
+      "is_protein_kb" -> e.is_protein_kb.toString,
+      "is_family_kb" -> e.is_family_kb.toString)))
+    val stop = data.stopList.toSeq.sorted
+    stop.zipWithIndex.foreach { case (w, i) =>
+      if (w != w.toLowerCase(java.util.Locale.ROOT))
+        throw KbFileError("stoplist.txt", i + 1,
+          s"stop word '$w' is not lower case (load lowercases it)")
+    }
+    val stopText = rows("stoplist.txt", stop.map(w => Seq("stop word" -> w)))
     val children = data.taxonomyParents.toSeq.groupBy(_._2)
       .map { case (p, cs) => p -> cs.map(_._1).sorted }
     val roots = (data.taxonomyParents.values.toSet --
       data.taxonomyParents.keySet).toSeq.sorted
     val sb = new StringBuilder
+    var line = 0
     def emit(label: String, depth: Int): Unit = {
+      line += 1
+      checkField("taxonomy.yml", line, "label", label, leading = true)
       sb.append("  " * depth).append(label).append(":\n")
       children.getOrElse(label, Nil).foreach(emit(_, depth + 1))
     }
     roots.foreach(emit(_, 0))
+
+    val d = Paths.get(dir)
+    Files.createDirectories(d)
+    def write(name: String, text: String): Unit =
+      Files.write(d.resolve(name), text.getBytes(StandardCharsets.UTF_8))
+    write("lexicon.tsv", lexicon)
+    write("kb.tsv", kb)
+    write("stoplist.txt", stopText)
     write("taxonomy.yml", sb.toString)
+  }
+
+  /** Reject a value [[load]] would not read back as written: load splits
+    * rows on line breaks and fields on tabs, trims every field, drops rows
+    * that start with `#`, and fills a default for an empty field (only
+    * kb.tsv's species reads back empty).
+    */
+  private def checkField(file: String, row: Int, what: String, v: String,
+                         leading: Boolean): Unit = {
+    val why =
+      if (v.exists(c => c == '\t' || c == '\r' || c == '\n'))
+        "contains a tab, CR or newline"
+      else if (v.isEmpty && what != "species") "is empty"
+      else if (v != v.trim) "has leading or trailing whitespace"
+      else if (leading && v.startsWith("#")) "starts with '#' (a comment row)"
+      else ""
+    if (why.nonEmpty) {
+      val shown = v.replace("\t", "\\t").replace("\r", "\\r")
+        .replace("\n", "\\n")
+      throw KbFileError(file, row, s"cannot render $what '$shown': it $why")
+    }
   }
 }

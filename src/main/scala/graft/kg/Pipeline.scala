@@ -10,14 +10,26 @@ import org.apache.spark.util.CollectionAccumulator
 /** The stage DAG (reference: ReachSystem.extractFrom, ReachSystem.scala:75-106,
   * re-planned for Spark's execution model — SURVEY.md §3.1):
   *
-  *   turns --(narrow: filter+annotate+rule-match flatMap, NO shuffle)--> mentions_raw
-  *   mentions_raw --(ONE exchange: salted conv grouping; context+coref+link+emit
-  *                   in a single partition-local fold)--> stage_b (linked/triples/aliases)
+  *   turns --(exchange: hash on (conv_id, turn_idx) into shuffle.partitions;
+  *            then narrow annotate+rule-match flatMap)--> mentions_raw
+  *   mentions_raw --(exchange: hash on (conv_id, chunk) into shuffle.partitions;
+  *                   context+coref+link+emit in one partition-local
+  *                   fold)--> stage_b (linked/triples/aliases)
   *   aliases --(tiny; CC)--> canon_map
   *   stage_b + broadcast(canon_map) --(broadcast join, narrow)--> edges, nodes
   *
   * Checkpoint-resumable at every stage boundary via TableIO manifests
   * (mention -> link -> canonicalize -> materialize, per the north rule).
+  *
+  * Work split: the two CPU-heavy stages split by turns and conversation
+  * chunks, never by bytes. Without the first exchange the match runs on the
+  * scan's splits, and file packing puts a whole mega-conversation file in
+  * one split; with a plain groupBy the fold's reduce side is what AQE
+  * coalesces by shuffle bytes, and a corpus's small shuffle collapses into
+  * one task. Both exchanges fix their partition count, which AQE does not
+  * coalesce. The match is turn-local (the alias map is keyed by conv_id and
+  * mention ids are content hashes), so its redistribution cannot change
+  * results.
   *
   * Skew: the conv grouping key is salted with `turn_idx / chunkTurns`, so a
   * mega-conversation fans out across tasks in chunkTurns-sized spans; the
@@ -116,6 +128,12 @@ object Pipeline {
       }
     }
 
+  /** Task count of the mentions and fold exchanges: the session's
+    * `spark.sql.shuffle.partitions` (`graft.Main` sets it to the core count).
+    */
+  private def workSplits(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   // ---- stage functions (shared by checkpointed + in-memory paths) --------
 
   /** Phase-A alias-definition aggregation (J3): a narrow entity-rules-only
@@ -176,22 +194,29 @@ object Pipeline {
                     runId: String, acc: CollectionAccumulator[Lineage]): Dataset[MentionRow] = {
     import spark.implicits._
     val (bTrie, _, bG) = Broadcasts.all(spark.sparkContext)
-    val annotated = Annotate(spark, turns, bTrie)
+    val annotated = Annotate(spark, turns.repartition(workSplits(spark),
+      col("conv_id"), col("turn_idx")), bTrie)
+    // the pre-pass reads the input as is: it annotates only candidate turns
     val defs = aliasDefsDs(spark, turns, bTrie, bG)
     val thr = aliasJoinThreshold
-    val useJoin =
-      defs.limit(math.min(thr + 1, Int.MaxValue.toLong).toInt).count() > thr
+    // one evaluation of the pre-pass: more than thr rows back means the
+    // join path, otherwise these rows are every definition
+    val head = defs.limit(math.min(thr + 1, Int.MaxValue.toLong).toInt)
+      .collect()
+    val useJoin = head.length > thr
     val extracted =
       if (crossConvAliases) {
         // multi-document batch semantics (sent61): pool every conversation's
         // alias surfaces and rescan ALL conversations with them. Capped —
         // an unbounded pool is a corpus-sized broadcast.
-        val pooled = defs.sort("_2", "_3")
-          .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
-          .map(x => (x._2, x._3)).distinct.sortBy(identity).toSeq
-        if (useJoin)
-          System.err.println(s"[graft] WARNING: crossConvAliases pool " +
-            s"truncated to $thr definitions (deterministic sort order)")
+        val pool =
+          if (useJoin) {
+            System.err.println(s"[graft] WARNING: crossConvAliases pool " +
+              s"truncated to $thr definitions (deterministic sort order)")
+            defs.sort("_2", "_3")
+              .limit(math.min(thr, Int.MaxValue.toLong).toInt).collect()
+          } else head
+        val pooled = pool.map(x => (x._2, x._3)).distinct.sortBy(identity).toSeq
         val bPool = spark.sparkContext.broadcast(pooled)
         annotated.flatMap { at =>
           InCount.inc()
@@ -201,7 +226,7 @@ object Pipeline {
         // broadcast path: surfaces sorted per conv so injection order (which
         // resolves overlapping-surface conflicts) is deterministic and
         // identical to the join path's
-        val aliasMap = defs.collect().groupBy(_._1).map { case (conv, xs) =>
+        val aliasMap = head.groupBy(_._1).map { case (conv, xs) =>
           conv -> xs.map(x => (x._2, x._3)).sortBy(identity).toSeq
         }
         val bAliases = spark.sparkContext.broadcast(aliasMap)
@@ -244,8 +269,11 @@ object Pipeline {
     // bound (measured 1.44x per-task inflation 2->8 cores); send only the
     // head and rebuild on the reduce side
     val compact = mentions.map(m => m.copy(labels = Array(m.labels.head)))
+      .withColumn("chunk", floor(col("turn_idx") / chunkTurns))
+    // the grouping reuses this distribution (no second exchange)
     val grouped = compact
-      .groupByKey(m => (m.conv_id, m.turn_idx / chunkTurns))
+      .repartition(workSplits(spark), col("conv_id"), col("chunk"))
+      .groupBy("conv_id", "chunk").as[(String, Long), MentionRow]
       .flatMapGroups { (key, it) =>
         Lexicon.withTaxonomy(bG.value.taxonomy) {
           val ms = it.map { m =>

@@ -65,16 +65,27 @@ class KbLoaderSpec extends AnyFunSuite {
   }
 
   test("seeded fuzz: 100 random bundles round-trip render ∘ load exactly") {
+    // ...or, where a value cannot be written as is, render fails loudly
     val rnd = new scala.util.Random(20260820L)
     // surfaces/ids over a tame but representative alphabet (spaces, case,
     // digits, dash/slash/quote — the characters the built-in KB uses)
     def word(chars: String, n: Int): String =
       Seq.fill(1 + rnd.nextInt(n))(chars(rnd.nextInt(chars.length))).mkString
-    def surface(): String =
+    // ...plus, now and then, a character the file format gives a meaning
+    // to (field and row separators, the comment mark, trimmed whitespace)
+    // at a random position, edges included
+    def spiced(v: String): String =
+      if (rnd.nextInt(40) != 0) v
+      else {
+        val at = rnd.nextInt(v.length + 1)
+        v.take(at) + "\t\r\n# \f" (rnd.nextInt(6)) + v.drop(at)
+      }
+    def surface(): String = spiced(
       Seq.fill(1 + rnd.nextInt(3))(
-        word("abcdefgXYZ0123-/'", 8)).mkString(" ")
+        word("abcdefgXYZ0123-/'", 8)).mkString(" "))
     val labels = Seq("Gene_or_gene_product", "Family", "Complex",
       "Simple_chemical", "Species", "Site")
+    var rendered, refused = 0
     for (i <- 1 to 100) {
       val lex = Seq.fill(rnd.nextInt(20))(
         (surface(), labels(rnd.nextInt(labels.size))))
@@ -82,21 +93,58 @@ class KbLoaderSpec extends AnyFunSuite {
         surface(), word("A-Z0-9", 8), if (rnd.nextBoolean()) "human" else "",
         word("abcdefgh", 6), rnd.nextInt(5) - 2,
         labels(rnd.nextInt(labels.size)), rnd.nextBoolean(), rnd.nextBoolean()))
-      val stop = Seq.fill(rnd.nextInt(6))(word("abcdefgh", 6))
+      val stop = Seq.fill(rnd.nextInt(6))(spiced(word("abcdefgh", 6)))
         .map(_.toLowerCase).toSet
       // taxonomy: a random forest — parent of node k is a random node < k
-      val names = (0 until rnd.nextInt(12)).map(k => s"L${i}n$k" + word("abc", 3))
-        .distinct
+      val names = (0 until rnd.nextInt(12)).map(k =>
+        spiced(s"L${i}n$k" + word("abc", 3))).distinct
       val tax = names.zipWithIndex.drop(1).collect {
         case (n, k) if rnd.nextBoolean() =>
           n -> names(rnd.nextInt(k))
       }.toMap
       val data = KbData(lex, kb, stop, tax)
       val dir = tmpDir(s"kbfuzz$i")
-      KbLoader.render(data, dir)
-      val back = KbLoader.merge(data, KbLoader.load(dir), replace = true)
-      assert(back == data, s"bundle $i failed to round-trip")
+      try {
+        KbLoader.render(data, dir)
+        rendered += 1
+        val back = KbLoader.merge(data, KbLoader.load(dir), replace = true)
+        assert(back == data, s"bundle $i failed to round-trip")
+      } catch {
+        case e: KbLoader.KbFileError =>
+          refused += 1
+          assert(e.getMessage.matches(
+            "(?s)(lexicon\\.tsv|kb\\.tsv|stoplist\\.txt|taxonomy\\.yml):" +
+              "[0-9]+: cannot render .*"), e.getMessage)
+          // refused before any file was written
+          assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+            .count() == 0, s"bundle $i: render wrote files before refusing")
+      }
     }
+    // the seed exercises both outcomes
+    assert(rendered >= 20 && refused >= 20, s"$rendered rendered, $refused refused")
+  }
+
+  test("render refuses a value load cannot read back, naming the row") {
+    val base = KbData(Seq("ok" -> "Family"), Nil, Set.empty, Map.empty)
+    def refused(d: KbData): String =
+      intercept[KbLoader.KbFileError](
+        KbLoader.render(d, tmpDir("kbbad"))).getMessage
+    assert(refused(base.copy(lexicon = base.lexicon :+ ("a\tb" -> "Family")))
+      .startsWith("lexicon.tsv:2: cannot render surface 'a\\tb'"))
+    assert(refused(base.copy(lexicon = Seq("#x" -> "Family")))
+      .startsWith("lexicon.tsv:1:"))
+    assert(refused(base.copy(kb = Seq(graft.model.KBEntry("a\nb", "1", "",
+      "user", 0, "Family", false, false)))).startsWith("kb.tsv:1:"))
+    assert(refused(base.copy(stopList = Set("The"))).startsWith("stoplist.txt:1:"))
+    assert(refused(base.copy(taxonomyParents = Map("b\r" -> "a")))
+      .startsWith("taxonomy.yml:2:"))
+    // '#' inside a value, and an empty species, read back unchanged
+    val fine = base.copy(lexicon = Seq("a#b" -> "Family"),
+      kb = Seq(graft.model.KBEntry("c#", "1", "", "user", 0, "Family",
+        false, false)))
+    val dir = tmpDir("kbfine")
+    KbLoader.render(fine, dir)
+    assert(KbLoader.merge(fine, KbLoader.load(dir), replace = true) == fine)
   }
 
   test("a mistyped --kb path fails loudly; so does a dir with none of the " +

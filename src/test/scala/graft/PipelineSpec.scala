@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-level pipeline specs: distributed CC, t2 P/R gate, determinism
-  * under repartitioning, checkpoint resume == cold run.
+  * under repartitioning, checkpoint resume == cold run, work split by turns
+  * on a skewed file layout.
   */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -132,5 +133,43 @@ class PipelineSpec extends AnyFunSuite {
     val perChunk = res.edges.groupBy(floor(col("turn_idx") / Pipeline.chunkTurns))
       .count().collect()
     assert(perChunk.length == 3)
+  }
+
+  test("mentions and fold split their work by turns, not by input file bytes") {
+    val dir = java.nio.file.Files.createTempDirectory("kgskew").toString
+    val (turns, expected) =
+      Transcripts.corpus(spark, 12, seed = 9, megaTurns = 1500)
+    // skewed layout: one large file holding the mega-conversation, three
+    // small files for the rest — the scan packs splits by file bytes
+    turns.filter(col("conv_id") === "mega").coalesce(1)
+      .write.parquet(s"$dir/input")
+    turns.filter(col("conv_id") =!= "mega").repartition(3)
+      .write.mode("append").parquet(s"$dir/input")
+    val input =
+      graft.sources.TranscriptSources.parquet(spark, s"$dir/input")
+    assert(input.inputFiles.length == 4)
+    val res = Pipeline.run(spark, input, s"$dir/run", resume = false)
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val lineage = res.lineage.collect()
+    def rowsIn(stage: String): Seq[Long] = lineage.toSeq
+      .filter(_.getAs[String]("stage") == stage).map(_.getAs[Long]("rows_in"))
+    val m = rowsIn("mentions")
+    assert(m.size == n, s"mentions ran on ${m.size} tasks, want $n")
+    assert(rowsIn("link_coref_emit").size == n,
+      s"fold ran on ${rowsIn("link_coref_emit").size} tasks, want $n")
+    assert(m.max <= 2.0 * m.sum / m.size,
+      s"largest mentions task read ${m.max} turns, mean ${m.sum / m.size}")
+    assert(Score.keysOf(res.edges).collect().toSet ==
+      Score.keysOf(expected.toDF()).collect().toSet)
+    // each stage plans exactly one exchange: the fold's grouping reuses the
+    // repartition's distribution instead of adding its own
+    val acc = new org.apache.spark.util.CollectionAccumulator[graft.model.Lineage]
+    spark.sparkContext.register(acc)
+    def exchanges(ds: org.apache.spark.sql.Dataset[_]): Int =
+      "Exchange ".r.findAllIn(ds.queryExecution.executedPlan.toString).size
+    assert(exchanges(Pipeline.stageMentions(spark, input, "plan", acc)) == 1)
+    val mentions = graft.io.TableIO(s"$dir/run").read(spark, "mentions_raw")
+      .as[graft.model.MentionRow]
+    assert(exchanges(Pipeline.stageB(spark, mentions, "plan", acc)) == 1)
   }
 }
